@@ -25,6 +25,7 @@ quirks, all pinned by the jsparse unit tests.
 
 from __future__ import annotations
 
+import os
 import re
 from collections import Counter
 
@@ -37,6 +38,23 @@ from codeontology_spark.fixtures import DEMO_FILES, FIXTURES
 from codeontology_spark.jsparse import extract_file
 
 _SRC_EXT = (".js", ".jsx", ".ts", ".tsx", ".mjs", ".cjs")
+
+# The executed-reference tests need the reference's own source tree; where a
+# pinned file is absent they are skipped (a present but changed file still
+# fails the sha256 pin in ref_exec). Parity evidence that runs without it:
+# tests/oracle_emit.py (the emitter oracle of test_triples), the pinned
+# 11,610-triple TTL shape test below, and the jsparse fixture tests.
+needs_ref_code = pytest.mark.skipif(
+    not all(os.path.isfile(os.path.join(ref_exec.REF, rel)) for rel in ref_exec._REF_SHA256),
+    reason=f"reference source tree not present under {ref_exec.REF}; parity rests on "
+    "tests/oracle_emit.py (test_triples), the pinned 11,610-triple TTL shape "
+    "test and the jsparse fixture tests",
+)
+needs_ref_ttl = pytest.mark.skipif(
+    not os.path.isdir(os.path.join(ref_exec.REF, "graph_data")),
+    reason=f"{ref_exec.REF}/graph_data not present; with no TTL dumps the "
+    "vocabulary check would compare against an empty set",
+)
 
 
 def _corpora() -> dict[str, dict[str, str]]:
@@ -88,6 +106,7 @@ def _our_key(e):
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("repo", sorted(_corpora()))
+@needs_ref_code
 def test_fallback_parser_matches_executed_reference(repo):
     files = _corpora()[repo]
     ref_ents = ref_exec.reference_parse(files)
@@ -159,6 +178,7 @@ def engine_fallback_triples(spark):
     return by_repo
 
 
+@needs_ref_code
 def test_fallback_pipeline_matches_executed_reference_triples(engine_fallback_triples):
     for repo, files in _corpora().items():
         ref_ents_by_file = ref_exec.reference_parse(files)
@@ -171,6 +191,7 @@ def test_fallback_pipeline_matches_executed_reference_triples(engine_fallback_tr
         )
 
 
+@needs_ref_code
 def test_spark_emission_matches_executed_reference_builder(engine_triples):
     """jsparse entities → reference pydantic models (URIs re-minted by the
     reference) → EXECUTED OntologyBuilder, vs the engine's Spark triples."""
@@ -190,6 +211,7 @@ def test_spark_emission_matches_executed_reference_builder(engine_triples):
 # 4. shape profile vs the reference's shipped TTL dumps
 # ---------------------------------------------------------------------------
 
+@needs_ref_ttl
 def test_vocabulary_covers_shipped_ttl_dumps(engine_triples):
     """Every code:* predicate/class the reference's recorded sessions ever
     emitted (graph_data/*.ttl) must be producible by the engine — checked
@@ -199,7 +221,7 @@ def test_vocabulary_covers_shipped_ttl_dumps(engine_triples):
     import glob
 
     ttl_vocab = set()
-    for f in glob.glob("/root/reference/graph_data/*.ttl"):
+    for f in glob.glob(os.path.join(ref_exec.REF, "graph_data", "*.ttl")):
         with open(f, encoding="utf-8", errors="replace") as fh:
             ttl_vocab.update(re.findall(r"code:[A-Za-z]+", fh.read()))
 
@@ -230,6 +252,7 @@ def test_vocabulary_covers_shipped_ttl_dumps(engine_triples):
     assert not missing, f"TTL dump vocabulary the engine never produces: {missing}"
 
 
+@needs_ref_code
 def test_docstring_comment_parity_with_executed_reference():
     """The EXECUTED reference OntologyBuilder lowers docstring/comments
     (ontology_builder.py:117-130); converting jsparse entities that carry
