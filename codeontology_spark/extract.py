@@ -14,6 +14,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .jsparse import extract_file
 from .schemas import ENTITY_SCHEMA
@@ -133,9 +134,8 @@ def _entity_columns(
 
 
 def _entity_rows(repo: str, path: str, commit: str, content: str) -> list[dict]:
-    """Row-dict variant kept for tests/incremental paths."""
-    from .schemas import ENTITY_SCHEMA
-
+    """One file's entity rows as dicts — the per-row parse that
+    ``extract_entities`` must reproduce (tests compare against it)."""
     cols: dict[str, list] = {f: [] for f in ENTITY_SCHEMA.fieldNames()}
     _entity_columns(cols, repo, path, commit, content)
     names = list(cols)
@@ -147,7 +147,6 @@ def extract_entities(
     apply_filters: bool = True,
     repartition: int | None = None,
     mode: str = "treesitter",
-    dedup_content: bool = True,
 ) -> DataFrame:
     """Source table → entity rows.
 
@@ -156,51 +155,24 @@ def extract_entities(
     array column is materialized. For skewed repos, pre-repartition by a
     salted key so one mega-repo cannot pin a single task (SURVEY.md §4.3).
 
-    ``dedup_content`` (default) parses each DISTINCT (path, content-sha)
-    exactly once and joins the entity rows back to every (repo, commit)
-    that contains that file. Entity rows are a pure function of (path,
-    content) — URIs mint from path+line, body hashes from content; only
-    the repo/commit columns differ — so the output is identical, but the
-    expensive Python parse runs once per distinct file. Real code corpora
-    are dominated by byte-identical duplicates (forks, vendored
-    node_modules, lockstep boilerplate), the same observation the A3
-    change-detection anti-join already exploits with the same content-sha
-    identity. This is the guide-§8 shape: do the heavy per-item work on
-    the deduplicated small set, then re-attach by key — the parse-side
-    dedup shuffle moves each distinct file's bytes once (map-side partial
-    dedup collapses within-partition copies first), orders of magnitude
-    cheaper than re-parsing them.
+    Each DISTINCT (path, content-sha) is parsed exactly once and its
+    entity rows are joined back to every (repo, commit) that contains that
+    file. Entity rows are a pure function of (path, content) — URIs mint
+    from path+line, body hashes from content; only the repo/commit columns
+    differ — so the output equals a per-row parse (``_entity_rows`` on each
+    source row), but the expensive Python parse runs once per distinct
+    file. Real code corpora are dominated by byte-identical duplicates
+    (forks, vendored node_modules, lockstep boilerplate), the same
+    observation the A3 change-detection anti-join already exploits with the
+    same content-sha identity. This is the guide-§8 shape: do the heavy
+    per-item work on the deduplicated small set, then re-attach by key —
+    the parse-side dedup shuffle moves each distinct file's bytes once
+    (map-side partial dedup collapses within-partition copies first),
+    orders of magnitude cheaper than re-parsing them.
     """
     df = source_filter(source_df) if apply_filters else source_df
 
     field_names = ENTITY_SCHEMA.fieldNames()
-
-    if not dedup_content:
-        if repartition:
-            # salt on (repo, path): files of one repo spread across tasks
-            df = df.repartition(repartition, F.col("repo"), F.col("path"))
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            extractor = _get_extractor(mode)
-            for pdf in batches:
-                cols: dict[str, list] = {f: [] for f in field_names}
-                for repo, path, commit, content in zip(
-                    pdf["repo"], pdf["path"], pdf["commit"], pdf["content"]
-                ):
-                    try:
-                        _entity_columns(cols, repo, path, commit, content or "",
-                                        extractor=extractor)
-                    except Exception:
-                        # mirror the reference's per-file failure tolerance
-                        # (processor.py:342-354): a broken file yields nothing
-                        continue
-                if cols["uri"]:
-                    yield pd.DataFrame(cols, columns=field_names)
-
-        return df.mapInPandas(gen, schema=ENTITY_SCHEMA)
-
-    from pyspark.sql.types import StructType
-
     parsed_schema = StructType(
         [f for f in ENTITY_SCHEMA.fields if f.name not in ("repo", "commit")]
     ).add("_csha", "string")

@@ -1,32 +1,29 @@
 """Multimodal columns: image/audio/video as opaque binary columns with
 typed metadata.
 
-Two layers:
+Two layers, both real:
 
-1. **Header metadata extraction (`parse_media_headers`) — REAL.** Pure
+1. **Header metadata extraction (`parse_media_headers`).** Pure
    stdlib byte parsing of PNG IHDR (width/height/bit depth) and WAV RIFF
    (sample rate/channels/duration) inside the Arrow `mapInPandas`
    machinery — no codec libraries needed, so this is a fully working
    operator, driver-oracled against a VALUES twin over the deterministic
    binary fixture table (`synth_binary_media`).
-2. **WAV sample decode (`decode_wav_samples`) — REAL.** PCM16 needs no
+2. **WAV sample decode (`decode_wav_samples`).** PCM16 needs no
    codec library (stdlib struct + numpy frombuffer), so audio sample
    decode is a fully working operator with an exact-integer oracle
    (VERDICT r4 #8).
-3. **Pixel decode + feature extraction — declared stub.** Image/video
-   decode needs PIL/ffmpeg, which this container lacks; `_decode_stub`
-   is a deterministic fake inside the same batch shape a deployment
-   would swap the real codec into.
+
+Pixel/video decode needs PIL/ffmpeg, which are not dependencies of this
+package, so it is not offered.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -40,29 +37,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("duration_ms", T.IntegerType(), True),
     ]
 )
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("payload_sha", T.StringType(), False),
-        T.StructField("n_bytes", T.IntegerType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType()), False),
-    ]
-)
-
-
-def synth_media(spark: SparkSession, n: int = 64) -> DataFrame:
-    """Deterministic fake media table (seeded payload bytes)."""
-    rows = []
-    for i in range(n):
-        kind = ("image", "audio", "video")[i % 3]
-        payload = hashlib.sha256(f"media{i}".encode()).digest() * (4 + i % 5)
-        rows.append(
-            (i, kind, bytearray(payload), f"application/x-fake-{kind}",
-             64 + i % 16, 48 + i % 16, 1000 + i * 10)
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
 # -- real header metadata extraction (PNG IHDR / WAV RIFF, stdlib only) ----
@@ -316,50 +290,4 @@ def decode_wav_samples(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "payload").mapInPandas(
         gen, schema=WAV_STATS_SCHEMA
-    )
-
-
-def _decode_stub(payload: bytes, kind: str) -> list[float]:
-    """STUB decode/feature-extract: a real deployment replaces this with
-    PIL/torchvision/ffmpeg. Deterministic: 8 floats from the payload hash
-    so tests can assert exact values."""
-    h = hashlib.sha256(payload or b"").digest()
-    return [b / 255.0 for b in h[:8]]
-
-
-def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column. The UDF
-    receives pandas batches (bounded by maxRecordsPerBatch) so decoded
-    frames never accumulate beyond one batch per core."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "payload_sha": [
-                    hashlib.sha256(bytes(p or b"")).hexdigest() for p in pdf["payload"]
-                ],
-                "n_bytes": [len(p or b"") for p in pdf["payload"]],
-                "feature": [
-                    _decode_stub(bytes(p or b""), k)
-                    for p, k in zip(pdf["payload"], pdf["kind"])
-                ],
-            }
-            yield pd.DataFrame(out)
-
-    cols = media.select("media_id", "kind", "payload")
-    return cols.mapInPandas(gen, schema=FEATURE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 500) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, ts_ms) to decode.
-    The expansion is a JVM sequence/explode — only the decode itself (not
-    implemented here) would run in Python."""
-    vids = media.filter(F.col("kind") == "video")
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-        ).alias("ts_ms"),
     )

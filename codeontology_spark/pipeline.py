@@ -35,16 +35,12 @@ def build_graph(
     repartition: int | None = None,
     persist: bool = True,
     mode: str = "treesitter",
-    dedup_content: bool = True,
 ) -> BuildResult:
     """source rows → (entities, triples). Both returned lazily; entities is
     persisted because emission fans out into several projections over it.
-    mode='fallback' runs the reference's regex-degraded parser semantics;
-    dedup_content=False forces the parse-every-row path (see
-    extract_entities)."""
+    mode='fallback' runs the reference's regex-degraded parser semantics."""
     ents = extract_entities(
-        source_df, apply_filters=apply_filters, repartition=repartition,
-        mode=mode, dedup_content=dedup_content,
+        source_df, apply_filters=apply_filters, repartition=repartition, mode=mode
     )
     if persist:
         # persist BEFORE the dedup split: dedup_colliding_uris unions two

@@ -214,11 +214,14 @@ def functions_with_many_parameters(t: DataFrame, min_params: int = 4) -> DataFra
 def transitive_closure(edges: DataFrame, max_iters: int = 20) -> DataFrame:
     """All (repo, src, dst) pairs reachable via ≥1 hops.
 
-    Path-doubling: R_{k+1} = R_k ∪ (R_k ∘ R_k), so a diameter-d graph
-    converges in ⌈log2 d⌉ rounds instead of d frontier steps — the
-    per-round driver/job overhead is what dominates iterative DataFrame
-    loops, and at cluster scale it halves the number of shuffles too.
-    New pairs are anti-joined against the known set so cycles terminate;
+    Path-tripling: each round adds R² ∪ R³ of the known pairs R, so k
+    rounds cover every path of up to 3^k hops: a chain of d edges takes
+    ⌈log3 d⌉ rounds that add pairs plus one that adds none, not d frontier
+    steps (per-round job overhead dominates iterative DataFrame loops).
+    The default ``max_iters=20`` covers 3^20 ≈ 3.5·10^9 hops, far beyond
+    any chain; if the last allowed round still adds pairs, it raises
+    ``RuntimeError`` rather than return a partial closure. New pairs are
+    anti-joined against the known set so cycles terminate;
     localCheckpoint() cuts the exploding lineage. edges: (repo, src, dst).
     """
     visited = edges.select("repo", "src", "dst").dropDuplicates(
@@ -253,6 +256,10 @@ def transitive_closure(edges: DataFrame, max_iters: int = 20) -> DataFrame:
         # "save one job by skipping this" variant was 28% SLOWER — three
         # union-tree re-plans per round cost more than one materialization
         visited = visited.unionByName(new).localCheckpoint(eager=True)
+    else:
+        raise RuntimeError(
+            f"transitive_closure: new pairs still found after max_iters={max_iters} rounds"
+        )
     return visited
 
 
@@ -369,7 +376,9 @@ def _min_label_reach(verts: DataFrame, edges: DataFrame, max_iters: int = 20) ->
     label(v) ← label(label(v)) (valid: if u reaches v and w reaches u then
     w reaches v), so convergence is O(log diameter) rounds instead of
     O(diameter). verts: (repo, uri); edges: (repo, src, dst), both assumed
-    restricted to active nodes. Returns (repo, uri, label)."""
+    restricted to active nodes. Returns (repo, uri, label); raises
+    ``RuntimeError`` if labels still change in the last of ``max_iters``
+    rounds, since unconverged labels would split components."""
     labels = verts.withColumn("label", F.col("uri")).localCheckpoint(eager=True)
     for _ in range(max_iters):
         via_edge = (
@@ -385,9 +394,6 @@ def _min_label_reach(verts: DataFrame, edges: DataFrame, max_iters: int = 20) ->
             .groupBy("repo", "uri")
             .agg(F.min("label").alias("label"))
         )
-        parent = relaxed.select(
-            "repo", F.col("uri").alias("label"), F.col("label").alias("grand")
-        )
         # TWO pointer jumps per round (label ← label(label) twice): valid
         # because any label of v still reaches v after jumping, so the
         # fixpoint (min node reaching v) is unchanged — but propagation
@@ -396,26 +402,27 @@ def _min_label_reach(verts: DataFrame, edges: DataFrame, max_iters: int = 20) ->
         # previous compare joins INSIDE the checkpointed plan (one
         # materialization job per round instead of checkpoint + a separate
         # compare-join action).
-        j1 = relaxed.join(parent, ["repo", "label"], "left").select(
-            "repo", "uri",
-            F.least(F.col("label"), F.coalesce("grand", "label")).alias("label"),
-        )
-        parent2 = j1.select(
-            "repo", F.col("uri").alias("label"), F.col("label").alias("grand")
-        )
-        stepped = (
-            j1.join(parent2, ["repo", "label"], "left")
-            .select(
+        jumped = relaxed
+        for _ in range(2):
+            parent = jumped.select(
+                "repo", F.col("uri").alias("label"), F.col("label").alias("grand")
+            )
+            jumped = jumped.join(parent, ["repo", "label"], "left").select(
                 "repo", "uri",
                 F.least(F.col("label"), F.coalesce("grand", "label")).alias("label"),
             )
-            .join(labels.select("repo", "uri", F.col("label").alias("_prev")), ["repo", "uri"])
+        stepped = (
+            jumped.join(labels.select("repo", "uri", F.col("label").alias("_prev")), ["repo", "uri"])
             .withColumn("_chg", F.col("label") != F.col("_prev"))
             .localCheckpoint(eager=True)
         )
         labels = stepped.select("repo", "uri", "label")
         if stepped.filter(F.col("_chg")).isEmpty():
             break
+    else:
+        raise RuntimeError(
+            f"_min_label_reach: labels still changing after max_iters={max_iters} rounds"
+        )
     return labels
 
 
@@ -632,66 +639,18 @@ def get_context(
 # -- B19: connected components (graph_store.py:364-372; SURVEY §4.2) --------
 
 def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
-    """Min-label propagation with pointer jumping over the symmetrized edge
-    set (GraphFrames/large-star-style iterative DataFrame joins). Each round
-    does (1) a neighbor-min step and (2) a label-of-label jump, so chains of
-    length n converge in O(log n) rounds — the per-round job overhead and
-    shuffle count, not per-row work, dominate iterative loops. Returns
-    (repo, uri, component) with component = min member id.
-    """
+    """Connected components: on the symmetrized edge set "u reaches v" is
+    "u and v share a component", so the min node reaching v
+    (``_min_label_reach``, the kernel SCC coloring also runs) is v's
+    min-member component id. Returns (repo, uri, component)."""
     sym = (
-        edges.select("repo", F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select("repo", F.col("dst").alias("a"), F.col("src").alias("b")))
+        edges.select("repo", "src", "dst")
+        .unionByName(edges.select("repo", F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select("repo", F.col("a").alias("uri"))
-        .distinct()
-        .withColumn("component", F.col("uri"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iters):
-        # (1) neighbor min
-        nbr = sym.select("repo", F.col("b").alias("uri"), F.col("a").alias("nbr_uri"))
-        cand = nbr.join(labels, ["repo", "uri"]).select(
-            "repo", F.col("nbr_uri").alias("uri"), "component"
-        )
-        stepped = (
-            labels.unionByName(cand)
-            .groupBy("repo", "uri")
-            .agg(F.min("component").alias("component"))
-        )
-        # (2) pointer jump ×2: component ← component's component, twice —
-        # labels stay inside the component under jumping, so the fixpoint
-        # (min member) is unchanged while chains collapse in fewer rounds.
-        # The changed-vs-previous compare is fused into the checkpointed
-        # plan (one materialization job per round instead of checkpoint +
-        # a separate compare-join action).
-        parent = stepped.select(
-            "repo", F.col("uri").alias("component"), F.col("component").alias("grand")
-        )
-        j1 = stepped.join(parent, ["repo", "component"], "left").select(
-            "repo", "uri",
-            F.least(F.col("component"), F.coalesce("grand", "component")).alias("component"),
-        )
-        parent2 = j1.select(
-            "repo", F.col("uri").alias("component"), F.col("component").alias("grand")
-        )
-        jumped = (
-            j1.join(parent2, ["repo", "component"], "left")
-            .select(
-                "repo", "uri",
-                F.least(F.col("component"), F.coalesce("grand", "component")).alias("component"),
-            )
-            .join(labels.select("repo", "uri", F.col("component").alias("_prev")), ["repo", "uri"])
-            .withColumn("_chg", F.col("component") != F.col("_prev"))
-            .localCheckpoint(eager=True)
-        )
-        labels = jumped.select("repo", "uri", "component")
-        if jumped.filter(F.col("_chg")).isEmpty():
-            break
-    return labels
+    verts = sym.select("repo", F.col("src").alias("uri")).distinct()
+    return _min_label_reach(verts, sym, max_iters).withColumnRenamed("label", "component")
 
 
 # -- B20: degree centrality / pagerank (graph_store.py:374-390) --------------

@@ -95,12 +95,7 @@ def main() -> None:
     for _ in range(trials):
         r0, c0 = stage_totals(spark)
         t0 = time.perf_counter()
-        # SPARK_GRAFT_SCALING_NO_DEDUP=1 measures the parse-every-row shape
-        # (the job r5's 2->8 gate measured); default is the production path
-        res = build_graph(
-            src_parquet, persist=True,
-            dedup_content=not os.environ.get("SPARK_GRAFT_SCALING_NO_DEDUP"),
-        )
+        res = build_graph(src_parquet, persist=True)
         res.raw_entities.count()
         t_extract = time.perf_counter() - t0
         n_triples = res.triples.count()

@@ -39,6 +39,18 @@ def test_transitive_closure_cycle_terminates(spark):
     assert len(pairs) == 9  # complete closure of a 3-cycle
 
 
+def test_transitive_closure_round_count(spark):
+    """Each R³ round triples the covered path length: a 27-edge chain
+    takes 3 rounds that add pairs (paths of ≤3, ≤9, ≤27 hops) and a 4th
+    that adds none. So max_iters=4 returns all 28·27/2 = 378 pairs, and
+    max_iters=3 stops with pairs still arriving and must raise."""
+    rows = [("g", f"n{i:02d}", f"n{i + 1:02d}") for i in range(27)]
+    edges = spark.createDataFrame(rows, "repo string, src string, dst string")
+    assert Q.transitive_closure(edges, max_iters=4).count() == 378
+    with pytest.raises(RuntimeError, match=r"transitive_closure.*max_iters=3\b"):
+        Q.transitive_closure(edges, max_iters=3)
+
+
 def test_call_chain_between(triples):
     """validation2: callerFunction → targetFunction is direct (no
     intermediates); via layers the chain query shape still executes."""
@@ -147,6 +159,19 @@ def test_connected_components_chain(spark):
         comps.setdefault(r.component, set()).add(r.uri)
     sizes = sorted(len(v) for v in comps.values())
     assert sizes == [2, 21]
+
+
+def test_connected_components_raises_at_cap(spark):
+    """A reversed 200-edge chain is still split into many pieces after 3
+    rounds; reaching the cap with labels still changing must raise, not
+    return the pieces as components. The default cap converges."""
+    rows = [("g", f"n{i + 1:03d}", f"n{i:03d}") for i in range(200)]
+    edges = spark.createDataFrame(rows, "repo string, src string, dst string")
+    with pytest.raises(RuntimeError, match=r"max_iters=3\b"):
+        Q.connected_components(edges, max_iters=3)
+    cc = Q.connected_components(edges).collect()
+    assert len(cc) == 201
+    assert {r.component for r in cc} == {"n000"}
 
 
 def test_nl_routing(triples):

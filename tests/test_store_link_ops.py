@@ -1,4 +1,4 @@
-"""Store / incremental / linker / canon / ops tests (batch semantics)."""
+"""Store / incremental / linker / ops tests (batch semantics)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,7 +23,6 @@ from codeontology_spark.ops.dedup import (
     simhash64,
     simhash_near_dup_pairs,
 )
-from codeontology_spark.ops.multimodal import extract_features, frame_sample_plan, synth_media
 from codeontology_spark.pipeline import build_graph
 from codeontology_spark.schemas import INPUT_SCHEMA
 from codeontology_spark.store import read_triples, resume_pending, write_file_lineage, write_triples
@@ -301,21 +300,6 @@ def test_two_phase_cap_identical_and_salted_pre_window(spark):
     # two windows; the first (innermost) one is salted — pmod(xxhash64(...))
     assert plan.count("Window") >= 2
     assert "pmod" in plan and "xxhash64" in plan
-
-
-def test_multimodal_plumbing(spark):
-    media = synth_media(spark, 12)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 12
-    assert all(len(r.feature) == 8 for r in rows)
-    # deterministic: same payload → same feature
-    again = {r.media_id: r.feature for r in extract_features(media).collect()}
-    for r in rows:
-        assert again[r.media_id] == r.feature
-    plan = frame_sample_plan(media, every_ms=500)
-    vids = media.filter(F.col("kind") == "video").count()
-    assert plan.select("media_id").distinct().count() == vids
 
 
 def test_ntriples_roundtrip(spark, tmp_path, built):

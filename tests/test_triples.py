@@ -199,7 +199,9 @@ def test_content_dedup_same_path_different_content(spark, tmp_path):
     carrying the SAME relative path with DIFFERENT content must get their
     own entity rows (and commits), not cross-attached ones; two repos with
     identical (path, content) must both get rows from the single parse.
-    The dedup path must be byte-identical to the parse-every-row path."""
+    The dedup path must give exactly the rows of a per-row parse
+    (``_entity_rows`` run on each source row)."""
+    from codeontology_spark.extract import _entity_rows, extract_entities
     from codeontology_spark.schemas import INPUT_SCHEMA
 
     rows = [
@@ -212,11 +214,14 @@ def test_content_dedup_same_path_different_content(spark, tmp_path):
     spark.createDataFrame(rows, schema=INPUT_SCHEMA).write.parquet(p)
     src = spark.read.parquet(p)
 
-    dedup = build_graph(src, persist=False, dedup_content=True).entities
-    plain = build_graph(src, persist=False, dedup_content=False).entities
+    dedup = extract_entities(src)
     key = ["repo", "path", "commit", "kind", "name", "uri"]
     d = sorted(map(tuple, dedup.select(*key).collect()))
-    q = sorted(map(tuple, plain.select(*key).collect()))
+    q = sorted(
+        tuple(e[k] for k in key)
+        for repo, path, commit, _, content in rows
+        for e in _entity_rows(repo, path, commit, content)
+    )
     assert d == q
     funcs = {(r.repo, r.name, r.commit) for r in dedup.filter(F.col("kind") == "function").collect()}
     assert funcs == {("repo/a", "fa", "ca"), ("repo/b", "fb", "cb"), ("repo/c", "fa", "cc")}
